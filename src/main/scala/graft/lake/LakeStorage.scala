@@ -6,10 +6,13 @@ import org.apache.spark.sql.functions._
 
 /** Date-partitioned Parquet lake (`dl/src/data_lake/storage_manager.py`):
   * `<root>/<layer>/<table>/date=YYYYMMDD/…` with layer conventions
-  * raw/processed/analytics/aggregated.
+  * raw/processed/analytics/aggregated, plus `star`: the warehouse base
+  * tables (dimensions and facts) a [[graft.Pipeline.runFull]] load
+  * stores once per run, so the reporting views read them instead of
+  * re-deriving the star schema from `processed` on every query.
   *
-  * Uses Hive-style `partitionBy("date")` so partition discovery and
-  * pruning are native: `readPartition` compiles to a scan of exactly one
+  * Uses the Hive-style `date=` directory layout so partition discovery
+  * and pruning are native: `readPartition` compiles to a scan of exactly one
   * directory — the manual glob/max logic of the reference
   * (`storage_manager.py:220-244`) becomes a catalog/FS listing.
   * Works against any Hadoop filesystem (local, HDFS, S3A) — the
@@ -17,19 +20,31 @@ import org.apache.spark.sql.functions._
   */
 object LakeStorage {
 
-  val layers = Seq("raw", "processed", "analytics", "aggregated")
+  val layers = Seq("raw", "processed", "analytics", "aggregated", "star")
 
   private def tablePath(root: String, layer: String, table: String) =
     s"$root/$layer/$table"
 
-  /** Write one dated partition of a table (snappy parquet — default). */
+  /** Write one dated partition of a table (snappy parquet — default),
+    * replacing that date's previous rows and no other date's. The rows
+    * land in a hidden staging directory (a `.`-name, which partition
+    * discovery skips) that then takes the partition's place, so a plan
+    * may read the date it rewrites. An empty `df` still replaces the
+    * partition: the write leaves one schema-only file, so the date
+    * reads back empty, not as the previous run's rows (a partitioned
+    * dynamic-overwrite write of no rows touches no partition at all).
+    */
   def write(df: DataFrame, root: String, layer: String, table: String,
-            date: String): Unit =
-    df.withColumn("date", lit(date))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic") // replace only this date
-      .partitionBy("date")
-      .parquet(tablePath(root, layer, table))
+            date: String): Unit = {
+    val dir = tablePath(root, layer, table)
+    val partition = new Path(s"$dir/date=$date")
+    val staged = new Path(s"$dir/.staging-$date-${java.util.UUID.randomUUID()}")
+    df.drop("date").write.parquet(staged.toString)
+    val fs = partition.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    fs.delete(partition, true)
+    if (!fs.rename(staged, partition))
+      throw new java.io.IOException(s"could not publish $staged as $partition")
+  }
 
   def read(spark: SparkSession, root: String, layer: String, table: String): DataFrame =
     spark.read.parquet(tablePath(root, layer, table))
@@ -61,13 +76,23 @@ object LakeStorage {
                       table: String): Option[String] =
     listPartitions(spark, root, layer, table).lastOption
 
-  /** Read only the newest partition — `where date = max` prunes at
-    * planning time to a single directory scan.
+  /** Read exactly one dated partition (`date` is `YYYYMMDD`, as written
+    * by [[write]]) — `where date = d` prunes at planning time to a
+    * single directory scan. A run that must see its own date's rows
+    * reads this, never [[readLatest]]: a back-fill of an older date
+    * after a newer one would otherwise read the newer date's rows.
+    */
+  def readPartition(spark: SparkSession, root: String, layer: String,
+                    table: String, date: String): DataFrame =
+    read(spark, root, layer, table).where(col("date") === date)
+
+  /** Read only the newest partition — [[readPartition]] of the last
+    * listed date.
     */
   def readLatest(spark: SparkSession, root: String, layer: String,
                  table: String): DataFrame =
     latestPartition(spark, root, layer, table) match {
-      case Some(d) => read(spark, root, layer, table).where(col("date") === d)
+      case Some(d) => readPartition(spark, root, layer, table, d)
       case None => spark.emptyDataFrame
     }
 

@@ -428,13 +428,28 @@ object StarSchema {
     * `create_aggregations` → validation). `dateId` stamps the daily
     * aggregate rows (the reference uses CURRENT_DATE; a parameter keeps
     * loads reproducible).
+    *
+    * `store` materializes a base table — `dim_business`, `dim_owner`,
+    * `fact_business_ownership`, `fact_owner_demographics`, in that
+    * order — and returns the frame every later table reads in its
+    * place: the fact is built from the stored dimensions,
+    * `fact_owner_demographics` from the stored `dim_owner`, and the
+    * metrics, daily aggregates and integrity gate from the stored
+    * tables. The default keeps the whole load one lazy DAG;
+    * [[graft.Pipeline.runFull]] writes each table to the lake and reads
+    * it back, so consumers of the map (the reporting views) scan the
+    * stored tables instead of re-running the joins, dedups and ranks.
     */
   def loadAll(spark: SparkSession, cleaned: DataFrame,
-              dateId: String = "2024-01-01"): Map[String, DataFrame] = {
-    val dimB = dimBusiness(cleaned)
-    val dimO = dimOwner(cleaned)
+              dateId: String = "2024-01-01",
+              store: (String, DataFrame) => DataFrame = (_, df) => df)
+      : Map[String, DataFrame] = {
+    val dimB = store("dim_business", dimBusiness(cleaned))
+    val dimO = store("dim_owner", dimOwner(cleaned))
     val dimR = dimRole(spark)
-    val fact = factOwnership(cleaned, dimB, dimO, dimR)
+    val fact = store("fact_business_ownership",
+      factOwnership(cleaned, dimB, dimO, dimR))
+    val demographics = store("fact_owner_demographics", factOwnerDemographics(dimO))
     val metrics = factBusinessMetrics(fact)
     Map(
       "dim_business" -> dimB,
@@ -442,7 +457,7 @@ object StarSchema {
       "dim_role" -> dimR,
       "fact_business_ownership" -> fact,
       "fact_business_metrics" -> metrics,
-      "fact_owner_demographics" -> factOwnerDemographics(dimO),
+      "fact_owner_demographics" -> demographics,
       "agg_daily_business" -> aggDailyBusiness(dimB, metrics, dateId),
       "agg_daily_owners" -> aggDailyOwners(dimO, fact, dimR, dateId),
       "agg_role_distribution" -> aggRoleDistribution(fact),

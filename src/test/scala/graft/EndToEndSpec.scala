@@ -8,6 +8,8 @@ import graft.operators.{Packing, Sampling}
 import graft.serve.QueryService
 import graft.textops.Curation
 import graft.warehouse.StarSchema
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -17,6 +19,8 @@ import java.nio.file.Files
   */
 class EndToEndSpec extends SparkSpec {
   import spark.implicits._
+
+  private object Plans extends AdaptiveSparkPlanHelper
 
   test("full pipeline: csv -> lake -> report -> warehouse -> serve") {
     val work = Files.createTempDirectory("graft_e2e").toString
@@ -125,6 +129,33 @@ class EndToEndSpec extends SparkSpec {
     assert(dist.nonEmpty)
     assert(dist.map(_.getAs[Long]("total_owners")).sum === 5)
 
+    // the warehouse base tables are stored once in the star layer, and
+    // the views read them: their executed plans scan star files only,
+    // never the processed rows the load derives them from
+    val starTables = Seq("dim_business", "dim_owner",
+      "fact_business_ownership", "fact_owner_demographics")
+    assert(new java.io.File(s"$work/lake/star").list().sorted.toSeq ===
+      starTables)
+    val views = Seq("v_role_distribution", "v_owner_demographics")
+    def rowsAndScans(view: String): (Seq[String], Seq[String]) = {
+      val q = spark.sql(s"SELECT * FROM $view")
+      val rows = q.collect().map(_.toString).sorted.toSeq
+      (rows, Plans.collectWithSubqueries(q.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+      }.flatten)
+    }
+    val stored = views.map(rowsAndScans)
+    views.zip(stored).foreach { case (v, (_, roots)) =>
+      // every scan is a star table, so none reads processed/business_owners
+      assert(roots.nonEmpty && roots.forall(_.contains(s"$work/lake/star/")),
+        s"$v scans $roots")
+    }
+    // same rows as the views over a lazy load of the same data
+    StarSchema.registerViews(spark,
+      StarSchema.loadAll(spark, res.cleaned, "2024-08-01"),
+      loadTs = "2024-08-01 00:00:00")
+    assert(views.map(rowsAndScans(_)._1) === stored.map(_._1))
+
     // re-run of the same date is idempotent: dynamic partition
     // overwrite replaces the partition instead of duplicating it
     val res2 = Pipeline.runFull(spark, csvPath, s"$work/lake",
@@ -134,6 +165,56 @@ class EndToEndSpec extends SparkSpec {
     assert(LakeStorage
       .readLatest(spark, s"$work/lake", "aggregated", "role_distribution")
       .count() === 5)
+    starTables.foreach { t =>
+      assert(LakeStorage.listPartitions(spark, s"$work/lake", "star", t) ===
+        Seq("20240801"), t)
+    }
+    assert(res2.warehouse("fact_business_ownership").count() === 5)
+  }
+
+  test("Pipeline.runFull back-fill: an older date after a newer one reads its own rows") {
+    val work = Files.createTempDirectory("graft_backfill").toString
+    val header = "Account Number,Legal Name,Owner First Name," +
+      "Owner Middle Initial,Owner Last Name,Suffix,Legal Entity Owner,Title"
+    def csvAt(name: String, rows: String*): String = {
+      val path = s"$work/$name.csv"
+      Files.writeString(java.nio.file.Paths.get(path),
+        (header +: rows).mkString("", "\n", "\n"))
+      path
+    }
+    val day2 = csvAt("day2",
+      "1001,ALPHA LLC,Amy,,Stone,,,CEO",
+      "1001,ALPHA LLC,Bob,J,Stone,,,MEMBER",
+      "1002,BETA CORP,,,,,GAMMA HOLDINGS INC,OWNER")
+    // day 1 has legal-entity owners only, so its fact_owner_demographics
+    // (named owners) is empty
+    val day1 = csvAt("day1",
+      "2001,ZETA INC,,,,,OMEGA TRUST,OWNER",
+      "2002,ETA LLC,,,,,SIGMA PARTNERS LP,SHAREHOLDER")
+    val lake = s"$work/lake"
+    Pipeline.runFull(spark, day2, lake, dateId = "2024-08-02")
+    val res1 = Pipeline.runFull(spark, day1, lake, dateId = "2024-08-01")
+
+    def roles(date: String): Map[String, Long] = LakeStorage
+      .readPartition(spark, lake, "aggregated", "role_distribution", date)
+      .collect().map(r => r.getAs[String]("Title") -> r.getAs[Long]("cnt"))
+      .toMap
+    assert(roles("20240801") === Map("OWNER" -> 1L, "SHAREHOLDER" -> 1L))
+    assert(roles("20240802") === Map("CEO" -> 1L, "MEMBER" -> 1L, "OWNER" -> 1L))
+    assert(res1.cleaned.count() === 2)
+    assert(res1.warehouse("fact_business_ownership").count() === 2)
+    assert(res1.warehouse("fact_owner_demographics").count() === 0)
+    assert(res1.integrityPassed)
+    assert(spark.sql("SELECT SUM(total_owners) FROM v_role_distribution")
+      .head().getLong(0) === 2)
+
+    // a corrected day-2 file with no named owners replaces day 2's
+    // rows even where a table comes out empty
+    val res2 = Pipeline.runFull(spark, day1, lake, dateId = "2024-08-02")
+    assert(res2.warehouse("fact_owner_demographics").count() === 0)
+    assert(LakeStorage.readPartition(spark, lake, "aggregated",
+      "name_distribution", "20240802").count() === 0)
+    assert(roles("20240802") === Map("OWNER" -> 1L, "SHAREHOLDER" -> 1L))
   }
 
   test("training-data lifecycle: near-dedup -> curate -> split -> report") {
